@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.PerfProbe [explain] q1 q2 ...
   * With `explain` as the first arg, also writes
-  * plans/r15/<q>_<tag>.txt (tag from SPARK_GRAFT_PLAN_TAG, default
+  * plans/r16/<q>_<tag>.txt (tag from SPARK_GRAFT_PLAN_TAG, default
   * "before").
   */
 object PerfProbe {

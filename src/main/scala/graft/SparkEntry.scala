@@ -453,9 +453,12 @@ object SparkEntry {
 
   /** The reference's shipped mllib artifact (spark_music.py:116's
     * model.save output) — read directly by both the Spark query and
-    * the DuckDB oracle for `als_factors_topk`.
+    * the DuckDB oracle for `als_factors_topk`. A deployment path: the
+    * `graft.mllib.artifact` system property overrides the default, and
+    * it is resolved where it is used.
     */
-  val MllibArtifactPath = "/root/reference/music_lens_als"
+  def MllibArtifactPath: String =
+    sys.props.getOrElse("graft.mllib.artifact", "/root/reference/music_lens_als")
 
   /** Shared oracle fragments for shingle-based dedup: word 3-gram
     * shingles hashed to 60-bit BIGINTs, mirroring Dedup.shingleSet /
@@ -1398,12 +1401,12 @@ object SparkEntry {
     // cap mirrors the query's bounded harness feed (a no-op at the
     // driver's sf0.01)
     "streaming_asof_enrich" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS tsu, value
-        |  FROM events WHERE event_type = 'purchase' AND event_id < 10000
+        |  FROM events WHERE event_type = 'purchase' AND event_id < ${graft.streaming.Streams.HarnessFeedCap}
         |), c AS (
         |  SELECT user_id, epoch_us(ts) AS tsu, MAX(event_id) AS click_id
-        |  FROM events WHERE event_type = 'click' AND event_id < 10000
+        |  FROM events WHERE event_type = 'click' AND event_id < ${graft.streaming.Streams.HarnessFeedCap}
         |  GROUP BY 1, 2
         |)
         |SELECT p.event_id, p.user_id, p.tsu, p.value,

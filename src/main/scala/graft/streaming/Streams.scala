@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.Fx.FxMaterialize
 import graft.functions.PseudoJson
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery,
+  TimeMode, Trigger}
 
 /** Structured Streaming layer (SURVEY.md §2.10).
   *
@@ -168,41 +170,27 @@ object Streams {
     * encodings.
     */
   def sessionWindowQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_type", $"ts")
-      .orderBy($"ts", $"user_id").collect()
-      .map(r => TimedEvent(r.getLong(0), r.getString(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L)))
+    val evs = timedFeed(spark, dir)
     if (evs.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)]
         .toDF("user_id", "s_start_ms", "s_end_ms", "n_events")
     val maxMs = evs.map(_.ts.getTime).max
-    val in = MemoryStream[TimedEvent](spark)
-    val name = runStreamToTable(spark, "session_windows", Some(4)) { (n, ck) =>
-      sessionWindowCounts(in.toDF(), "ts", "user_id",
-          gap = "12 hours", lateness = "30 seconds")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(evs.toIndexedSeq)
-      q.processAllAvailable()
-      // ONE sentinel advances the watermark past every data session's
-      // end at its batch's END; the engine's no-data micro-batch
-      // (shouldRunAnotherBatch on watermark advance, awaited by
-      // processAllAvailable) is the trigger that emits the finalized
-      // sessions. user -1 keeps the synthetic session out of the data
-      // keys.
-      in.addData(TimedEvent(-1L, "sentinel",
-        new java.sql.Timestamp(maxMs + 2 * SessionGapMs)))
-      q.processAllAvailable()
-    }
+    // ONE sentinel slice advances the watermark past every data
+    // session's end at its batch's END; the engine's no-data
+    // micro-batch (shouldRunAnotherBatch on watermark advance, awaited
+    // by processAllAvailable) is the trigger that emits the finalized
+    // sessions. user -1 keeps the synthetic session out of the data
+    // keys.
+    val sentinel = TimedEvent(-1L, "sentinel",
+      new java.sql.Timestamp(maxMs + 2 * SessionGapMs))
     // ms-precision feed → unix_millis bounds are exact; session end is
     // last-event ts + gap by definition, mirrored verbatim in SQL.
-    spark.table(name)
+    streamTable(spark, "session_windows", Seq(evs, Seq(sentinel)),
+        OutputMode.Append) { in =>
+      sessionWindowCounts(in.toDF(), "ts", "user_id",
+        gap = "12 hours", lateness = "30 seconds")
+    }
       .filter($"user_id" =!= -1L)
       .select($"user_id",
         unix_millis($"session_window.start").as("s_start_ms"),
@@ -296,19 +284,44 @@ object Streams {
       .trigger(trigger)
       .foreachBatch((batch: DataFrame, id: Long) => emit(wordCounts(batch), id))
 
-  /** Shared MemoryStream harness lifecycle for the driver-contract
-    * streaming queries: unique memory-sink name, temp checkpoint,
-    * optional stream-local state-partition override (saved and
-    * restored around `start`), and GUARANTEED query stop + checkpoint
-    * reclamation even when the feed fails mid-way — a failed
-    * `processAllAvailable` must not leave an orphaned streaming query
-    * holding state-store resources, nor litter tmp with checkpoints.
-    * Returns the memory-sink table name.
+  /** Stream-local confs of the harness streams: 4 state partitions —
+    * plenty for the HarnessFeedCap-bounded feeds, and 8× less
+    * per-batch checkpoint fan-out than a 32-core session's batch
+    * setting (a production deployment sizes this to its key
+    * cardinality).
+    */
+  private[streaming] val HarnessConfs: Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> "4")
+
+  /** [[HarnessConfs]] on the RocksDB state-store provider, which
+    * `transformWithState` requires.
+    */
+  private[streaming] val TwsConfs: Map[String, String] = HarnessConfs +
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** The one lifecycle of the driver-contract harness streams: starts
+    * `writer` under a unique query name (the memory sink's table) and a
+    * single-use scratch checkpoint, runs `feed` against the query, then
+    * stops it and deletes the checkpoint. Returns the query name.
+    *
+    * Confs: `confs` are set on `spark` only around `start`.
+    * StreamExecution clones the session when the query starts, so the
+    * stream runs with them for its whole life, while the session — and
+    * every DataFrame planned in it afterwards — keeps its own values:
+    * each key is set back to its prior value, or unset if it had none,
+    * so `spark.conf.getAll` is the same before and after.
+    *
+    * Failure: the query is stopped and the checkpoint reclaimed even
+    * when the feed fails mid-way — a failed `processAllAvailable` must
+    * not leave an orphaned streaming query holding state-store
+    * resources, nor litter scratch with checkpoints — and the feed's
+    * exception is the one rethrown.
     */
   private[streaming] def runStreamToTable(spark: SparkSession,
-      prefix: String, statePartitions: Option[Int])(
-      start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): String = {
+      prefix: String, confs: Map[String, String])(
+      writer: => DataStreamWriter[_])(
+      feed: StreamingQuery => Unit): String = {
     val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // single-use scratch checkpoint (deleted in the finally below, and
     // a memory sink cannot recover from it anyway): prefer tmpfs when
@@ -319,13 +332,16 @@ object Streams {
     // and do NOT go through this helper.
     val ckpt = graft.sources.Sources.scratchTempDir("graft_ckpt")
     try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      statePartitions.foreach(p =>
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString))
+      val prior = spark.conf.getAll
       val q =
-        try start(name, ckpt.toString)
-        finally statePartitions.foreach(_ =>
-          spark.conf.set("spark.sql.shuffle.partitions", prev))
+        try {
+          confs.foreach { case (k, v) => spark.conf.set(k, v) }
+          writer.queryName(name)
+            .option("checkpointLocation", ckpt.toString).start()
+        } finally confs.keys.foreach(k => prior.get(k) match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        })
       // stop() can itself throw (e.g. a stop timeout on a wedged
       // query) — keep the feed's root-cause exception primary and
       // attach the stop failure as suppressed
@@ -347,6 +363,81 @@ object Streams {
     }
   }
 
+  /** The shared MemoryStream body of the harness streams: one
+    * MemoryStream feeds `slices` in order — each slice one `addData`
+    * block, so one micro-batch, awaited before the next — into the
+    * stream `sink` writes; lifecycle and confs as [[runStreamToTable]].
+    * Returns the query name.
+    */
+  private def feedStream[T: Encoder](spark: SparkSession,
+      prefix: String, slices: Seq[Seq[T]],
+      confs: Map[String, String] = HarnessConfs)(
+      sink: Dataset[T] => DataStreamWriter[_]): String = {
+    val in = MemoryStream[T](spark)
+    runStreamToTable(spark, prefix, confs)(sink(in.toDS())) { q =>
+      slices.foreach { s => in.addData(s); q.processAllAvailable() }
+    }
+  }
+
+  /** [[feedStream]] into the memory sink in `mode`: the sink's table,
+    * holding every row `query` emitted.
+    */
+  private[streaming] def streamTable[T: Encoder](spark: SparkSession,
+      prefix: String, slices: Seq[Seq[T]], mode: OutputMode,
+      confs: Map[String, String] = HarnessConfs)(
+      query: Dataset[T] => Dataset[_]): DataFrame =
+    spark.table(feedStream(spark, prefix, slices, confs)(in =>
+      memorySink(query(in), mode)))
+
+  private def memorySink(ds: Dataset[_], mode: OutputMode): DataStreamWriter[_] =
+    ds.writeStream.format("memory").outputMode(mode)
+
+  /** `xs` in contiguous slices of ceil(|xs| / n) rows — at most `n`
+    * slices, the last one possibly shorter.
+    */
+  private def sliced[T](xs: Seq[T], n: Int): Seq[Seq[T]] =
+    xs.grouped(math.max(1, math.ceil(xs.length.toDouble / n).toInt)).toSeq
+
+  /** Capped events feed in (ts, user_id) order with ms timestamps —
+    * the event-time window queries' feed.
+    */
+  private def timedFeed(spark: SparkSession, dir: String): Seq[TimedEvent] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" < HarnessFeedCap)
+      .select($"user_id", $"event_type", $"ts")
+      .orderBy($"ts", $"user_id").collect()
+      .map(r => TimedEvent(r.getLong(0), r.getString(1),
+        new java.sql.Timestamp(r.getLong(2) / 1000000L))).toSeq
+  }
+
+  /** Capped events feed (event_id ≥ `from`) as integer cents in
+    * event_id order — the cents-valued stateful queries' feed.
+    */
+  private def centFeed(spark: SparkSession, dir: String,
+      from: Long = 0L): Seq[CentEvent] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" >= from && $"event_id" < HarnessFeedCap)
+      .select($"user_id", $"event_id",
+        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
+      .orderBy($"event_id")
+      .as[CentEvent].collect().toSeq
+  }
+
+  /** Capped events feed in event_id order with µs event times — the
+    * event-time stateful queries' feed.
+    */
+  private def stampedFeed(spark: SparkSession, dir: String): Seq[StampedRow] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" < HarnessFeedCap)
+      .select($"event_id", $"user_id",
+        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
+      .orderBy($"event_id")
+      .as[StampedRow].collect().toSeq
+  }
+
   /** Driver-contract query with a FULL DuckDB oracle: feed the
     * corpus's decoded events through the real flatMapGroupsWithState
     * marker operator via MemoryStream and return the flushed rows.
@@ -362,20 +453,13 @@ object Streams {
     * operator is hash-checked end-to-end.
     */
   def markerFlushQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val evs = graft.operators.TextOps.pseudoJsonRoundtrip(spark, dir)
       .filter($"event_id" < HarnessFeedCap).collect()
       .map(r => RateEvent(r.getInt(1), r.getString(2), r.getInt(3), r.getInt(4)))
-    val in = MemoryStream[RateEvent](spark)
-    in.addData(evs.toIndexedSeq)
-    val name = runStreamToTable(spark, "marker_flush", Some(4)) { (n, ck) =>
-      MarkerBuffer.markerFlush(in.toDS())
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q => q.processAllAvailable() }
-    spark.table(name).orderBy("userid", "flushSeq", "songid", "tag", "rating")
+    streamTable(spark, "marker_flush", Seq(evs.toSeq), OutputMode.Append)(
+      MarkerBuffer.markerFlush(_))
+      .orderBy("userid", "flushSeq", "songid", "tag", "rating")
   }
 
   /** Deterministic event_id cap for driver-fed streaming harness
@@ -401,50 +485,32 @@ object Streams {
     * never hashes engine-specific timestamp encodings.
     */
   def windowedCountsQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     // events.ts is nanos-since-epoch (TESTDATA note). The feed cap is
     // the same DETERMINISTIC event_id predicate streaming_asof_enrich
     // mirrors in its oracle (an ORDER BY/LIMIT cap could tie-break
     // differently across engines); order within the batch is fixed for
     // reproducibility but can't affect the finalized counts.
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_type", $"ts")
-      .orderBy($"ts", $"user_id").collect()
-      .map(r => TimedEvent(r.getLong(0), r.getString(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L)))
+    val evs = timedFeed(spark, dir)
     if (evs.isEmpty)
       return Seq.empty[(Long, Long, String, Long)]
         .toDF("w_start_us", "w_end_us", "event_type", "n_events")
     val maxMs = evs.map(_.ts.getTime).max
-    val in = MemoryStream[TimedEvent](spark)
-    // state partitions = 4: plenty for the HarnessFeedCap-bounded
-    // (event_id < 10000) harness feed, 8× less
-    // per-batch checkpoint fan-out than the session's batch setting (a
-    // production deployment sizes this to its key cardinality)
-    val name = runStreamToTable(spark, "windowed_counts", Some(4)) { (n, ck) =>
-      windowedEventCounts(in.toDF(), "ts", "event_type",
-          windowLen = "1 hour", lateness = "30 seconds")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(evs.toIndexedSeq)
-      q.processAllAvailable()
-      // ONE sentinel advances the watermark past the data at its
-      // batch's END; the engine's no-data micro-batch (fired on any
-      // watermark advance, awaited by processAllAvailable) is the
-      // trigger in which the finalized data windows are emitted
-      in.addData(TimedEvent(0, "sentinel",
-        new java.sql.Timestamp(maxMs + 2 * 3600 * 1000L)))
-      q.processAllAvailable()
-    }
+    // ONE sentinel slice advances the watermark past the data at its
+    // batch's END; the engine's no-data micro-batch (fired on any
+    // watermark advance, awaited by processAllAvailable) is the
+    // trigger in which the finalized data windows are emitted
+    val sentinel = TimedEvent(0, "sentinel",
+      new java.sql.Timestamp(maxMs + 2 * 3600 * 1000L))
     // sentinel 1's own window finalizes once sentinel 2 passes it —
     // keep the synthetic rows out of the reported counts. Hour windows
     // are second-aligned, so timestamp→long (epoch seconds) ×1e6 is
     // the exact epoch-µs bound the oracle computes from epoch_us(ts).
-    spark.table(name)
+    streamTable(spark, "windowed_counts", Seq(evs, Seq(sentinel)),
+        OutputMode.Append) { in =>
+      windowedEventCounts(in.toDF(), "ts", "event_type",
+        windowLen = "1 hour", lateness = "30 seconds")
+    }
       .filter($"event_type" =!= "sentinel")
       .select(($"window.start".cast("long") * 1000000L).as("w_start_us"),
         ($"window.end".cast("long") * 1000000L).as("w_end_us"),
@@ -510,13 +576,10 @@ object Streams {
 
   def dsv2StreamQuery(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val name = runStreamToTable(spark, "dsv2_stream", Some(4)) { (n, ck) =>
-      dsv2WindowedRelation(spark)
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q => q.processAllAvailable() }
-    spark.table(name).orderBy($"w_start_us")
+    spark.table(runStreamToTable(spark, "dsv2_stream", HarnessConfs)(
+      memorySink(dsv2WindowedRelation(spark), OutputMode.Append))(
+      _.processAllAvailable()))
+      .orderBy($"w_start_us")
   }
 
   /** Driver-contract query with a FULL DuckDB oracle: the WHOLE
@@ -532,22 +595,15 @@ object Streams {
   def dsv2PipeQuery(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val base = graft.sources.Sources.scratchDir(spark, "dsv2_pipe")
-    // fresh table + checkpoint per invocation (the bench re-runs
-    // queries in one JVM; appending into a shared table would double)
+    // fresh table per invocation (the bench re-runs queries in one
+    // JVM; appending into a shared table would double)
     val dest = new java.io.File(base,
       java.util.UUID.randomUUID().toString).toString
-    val ck = new java.io.File(base,
-      "ck_" + java.util.UUID.randomUUID().toString).toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try dsv2WindowedRelation(spark)
+    runStreamToTable(spark, "dsv2_pipe", HarnessConfs)(
+      dsv2WindowedRelation(spark)
         .writeStream.format("graft.sources.ManifestV2")
         .option("path", dest)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try q.processAllAvailable() finally q.stop()
+        .outputMode(OutputMode.Append))(_.processAllAvailable())
     spark.read.format("graft.sources.ManifestV2").option("path", dest).load()
       .orderBy($"w_start_us")
   }
@@ -574,16 +630,12 @@ object Streams {
       src.filter($"okey" % 3 === t)
         .write.format("graft.sources.ManifestV2")
         .option("path", dest).mode("append").save()
-    val name = runStreamToTable(spark, "table_feed", Some(4)) { (n, ck) =>
-      spark.readStream.format("graft.sources.ManifestV2")
-        .option("path", dest).load()
-        .groupBy($"m")
-        .agg(count(lit(1)).as("n"), sum($"okey").as("key_sum_raw"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete).start()
-    } { q => q.processAllAvailable() }
-    spark.table(name)
+    val agg = spark.readStream.format("graft.sources.ManifestV2")
+      .option("path", dest).load()
+      .groupBy($"m")
+      .agg(count(lit(1)).as("n"), sum($"okey").as("key_sum_raw"))
+    spark.table(runStreamToTable(spark, "table_feed", HarnessConfs)(
+      memorySink(agg, OutputMode.Complete))(_.processAllAvailable()))
       .select($"m", $"n",
         expr("CAST(key_sum_raw AS BIGINT)").as("key_sum"))
       .orderBy($"m")
@@ -610,29 +662,41 @@ object Streams {
     */
   def streamingUpsertQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_upsert")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
-    val src = new java.io.File(work, "src").toString
-    val sink = new java.io.File(work, "sink").toString
-    val ck = new java.io.File(work, "ck").toString
     val orders = graft.Tables.orders(spark, dir)
       .select($"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
-      val q = spark.readStream.format("graft.sources.ManifestV2")
+    // epoch 1: updates kill the stale base versions by key
+    upsertReplayQuery(spark, "stream_upsert", orders,
+      orders.filter($"okey" % 7 === 0).select($"okey", ($"m" + 1000L).as("m")),
+      "upsertKey" -> "okey")
+  }
+
+  /** The shared body of the upsert CDC queries: `base` is published as
+    * a ManifestV2 source commit and streamed into a ManifestV2 upsert
+    * sink (`sinkOptions`) as epoch 0 — plain backfill; then `cdc`
+    * lands as a second source commit, which the SAME running query
+    * streams through the same checkpoint as epoch 1. The read-back
+    * states, per base m-class, the row count, key sum and how many rows
+    * are the updated (m ≥ 1000) version.
+    */
+  private def upsertReplayQuery(spark: SparkSession, prefix: String,
+      base: DataFrame, cdc: DataFrame,
+      sinkOptions: (String, String)*): DataFrame = {
+    val work = new java.io.File(graft.sources.Sources.scratchDir(spark, prefix),
+      java.util.UUID.randomUUID().toString)
+    val src = new java.io.File(work, "src").toString
+    val sink = new java.io.File(work, "sink").toString
+    def publish(df: DataFrame): Unit = df.write.format("graft.sources.ManifestV2")
+      .option("path", src).mode("append").save()
+    publish(base)
+    runStreamToTable(spark, prefix, Map.empty)(
+      spark.readStream.format("graft.sources.ManifestV2")
         .option("path", src).load()
         .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "okey")
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
+        .option("path", sink).options(sinkOptions.toMap)) { q =>
+      q.processAllAvailable() // epoch 0: backfill
+      publish(cdc)
+      q.processAllAvailable() // epoch 1: the CDC batch
     }
-    orders.write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill
-    orders.filter($"okey" % 7 === 0)
-      .select($"okey", ($"m" + 1000L).as("m"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates kill the stale base versions by key
     spark.read.format("graft.sources.ManifestV2")
       .option("path", sink).load()
       .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
@@ -640,7 +704,7 @@ object Streams {
         expr("CAST(SUM(okey) AS BIGINT)").as("key_sum"),
         expr("CAST(SUM(CASE WHEN m >= 1000 THEN 1 ELSE 0 END) AS BIGINT)")
           .as("updated_n"))
-      .orderBy($"m0")
+      .orderBy(col("m0"))
   }
 
   /** [[streamingUpsertQuery]] oracle: every key exactly once, the
@@ -670,40 +734,14 @@ object Streams {
     */
   def streamingTombstoneQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_tomb")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
-    val src = new java.io.File(work, "src").toString
-    val sink = new java.io.File(work, "sink").toString
-    val ck = new java.io.File(work, "ck").toString
     val orders = graft.Tables.orders(spark, dir)
       .select($"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
-      val q = spark.readStream.format("graft.sources.ManifestV2")
-        .option("path", src).load()
-        .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "okey")
-        .option("upsertDeleteCol", "del")
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    orders.select($"okey", $"m", lit(false).as("del"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill (no tombstones)
-    orders.filter($"okey" % 7 === 0 || $"okey" % 5 === 3)
-      .select($"okey", ($"m" + 1000L).as("m"),
-        ($"okey" % 5 === 3).as("del"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates + tombstones in one CDC batch
-    spark.read.format("graft.sources.ManifestV2")
-      .option("path", sink).load()
-      .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
-      .agg(count(lit(1)).as("n"),
-        expr("CAST(SUM(okey) AS BIGINT)").as("key_sum"),
-        expr("CAST(SUM(CASE WHEN m >= 1000 THEN 1 ELSE 0 END) AS BIGINT)")
-          .as("updated_n"))
-      .orderBy($"m0")
+    // epoch 0 carries no tombstones; epoch 1 mixes updates + tombstones
+    upsertReplayQuery(spark, "stream_tomb",
+      orders.select($"okey", $"m", lit(false).as("del")),
+      orders.filter($"okey" % 7 === 0 || $"okey" % 5 === 3)
+        .select($"okey", ($"m" + 1000L).as("m"), ($"okey" % 5 === 3).as("del")),
+      "upsertKey" -> "okey", "upsertDeleteCol" -> "del")
   }
 
   /** Driver-contract query for TYPED upsert keys (the r12 follow-on to
@@ -718,38 +756,14 @@ object Streams {
     */
   def streamingUpsertStrQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_upsert_str")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
-    val src = new java.io.File(work, "src").toString
-    val sink = new java.io.File(work, "sink").toString
-    val ck = new java.io.File(work, "ck").toString
     val orders = graft.Tables.orders(spark, dir)
       .select(concat(lit("u"), $"o_orderkey".cast("string")).as("ukey"),
         $"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
-      val q = spark.readStream.format("graft.sources.ManifestV2")
-        .option("path", src).load()
-        .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "ukey")
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    orders.write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill
-    orders.filter($"okey" % 7 === 0)
-      .select($"ukey", $"okey", ($"m" + 1000L).as("m"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates kill stale versions by STRING key
-    spark.read.format("graft.sources.ManifestV2")
-      .option("path", sink).load()
-      .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
-      .agg(count(lit(1)).as("n"),
-        expr("CAST(SUM(okey) AS BIGINT)").as("key_sum"),
-        expr("CAST(SUM(CASE WHEN m >= 1000 THEN 1 ELSE 0 END) AS BIGINT)")
-          .as("updated_n"))
-      .orderBy($"m0")
+    // epoch 1: updates kill stale versions by STRING key
+    upsertReplayQuery(spark, "stream_upsert_str", orders,
+      orders.filter($"okey" % 7 === 0)
+        .select($"ukey", $"okey", ($"m" + 1000L).as("m")),
+      "upsertKey" -> "ukey")
   }
 
   /** [[streamingUpsertStrQuery]] oracle: identical closed form to the
@@ -795,53 +809,52 @@ object Streams {
     * values in both engines.
     */
   def streamStreamJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val (clicks, purchases) = clickPurchaseFeeds(spark, dir)
-    if (clicks.isEmpty || purchases.isEmpty)
+    val fed = clickPurchaseFeed(spark, dir)
+    if (!fed.exists(_._1 == "click") || !fed.exists(_._1 == "purchase"))
       return Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("click_id", "purchase_id", "user_id", "c_ts_ms", "p_ts_ms")
-    val inC = MemoryStream[KeyedTimedEvent](spark)
-    val inP = MemoryStream[KeyedTimedEvent](spark)
-    val joined = streamStreamJoin(
-      inC.toDF().select($"eventId".as("c_id"), $"userId", $"ts".as("c_ts")),
-      inP.toDF().select($"eventId".as("p_id"), $"userId", $"ts".as("p_ts")),
-      "userId", "c_ts", "p_ts", window = "30 minutes")
-    val name = runStreamToTable(spark, "ss_join", Some(4)) { (n, ck) =>
-      joined
-        .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
-          col("l.userId").as("user_id"),
-          unix_millis(col("l.c_ts")).as("c_ts_ms"),
-          unix_millis(col("r.p_ts")).as("p_ts_ms"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      inC.addData(clicks.toIndexedSeq)
-      inP.addData(purchases.toIndexedSeq)
-      q.processAllAvailable()
-    }
-    spark.table(name).orderBy($"click_id", $"purchase_id")
+    clickPurchaseJoin(spark, "ss_join", Seq(fed), "inner")
+      .orderBy($"click_id", $"purchase_id")
   }
 
   /** Shared harness feed for the stream-stream join queries: ONE scan
-    * + collect over the capped events slice yields both typed feeds
-    * (the former per-type collects each re-scanned the events table).
-    * Global event_id order is preserved, so each per-type slice is in
-    * exactly the order the per-type collects produced.
+    * + collect over the capped events slice yields both join sides as
+    * (event_type, event) rows in global event_id order.
     */
-  private def clickPurchaseFeeds(spark: SparkSession,
-      dir: String): (Array[KeyedTimedEvent], Array[KeyedTimedEvent]) = {
+  private def clickPurchaseFeed(spark: SparkSession,
+      dir: String): Seq[(String, KeyedTimedEvent)] = {
     import spark.implicits._
-    val fed = graft.Tables.events(spark, dir)
+    graft.Tables.events(spark, dir)
       .filter($"event_id" < HarnessFeedCap &&
         $"event_type".isin("click", "purchase"))
       .select($"event_id", $"user_id", $"ts", $"event_type")
       .orderBy($"event_id").collect() // bounded: HarnessFeedCap
       .map(r => (r.getString(3), KeyedTimedEvent(r.getLong(0), r.getLong(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L))))
-    (fed.collect { case ("click", e) => e },
-      fed.collect { case ("purchase", e) => e })
+        new java.sql.Timestamp(r.getLong(2) / 1000000L)))).toSeq
+  }
+
+  /** The click → purchase attribution join (a purchase within 30
+    * minutes after a click by the same user) of the tagged feed: ONE
+    * MemoryStream split by event_type into the two join sides — a
+    * stream-stream self-join, so every trigger serves both sides the
+    * same slice and each side's watermark tracks its own rows.
+    * Timestamps are emitted as epoch-ms BIGINTs.
+    */
+  private def clickPurchaseJoin(spark: SparkSession, prefix: String,
+      slices: Seq[Seq[(String, KeyedTimedEvent)]], joinType: String): DataFrame = {
+    import spark.implicits._
+    streamTable(spark, prefix, slices, OutputMode.Append) { in =>
+      def side(kind: String, id: String, ts: String) = in.filter($"_1" === kind)
+        .select($"_2.eventId".as(id), $"_2.userId".as("userId"), $"_2.ts".as(ts))
+      streamStreamJoin(side("click", "c_id", "c_ts"),
+          side("purchase", "p_id", "p_ts"),
+          "userId", "c_ts", "p_ts", window = "30 minutes", joinType = joinType)
+        .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
+          col("l.userId").as("user_id"),
+          unix_millis(col("l.c_ts")).as("c_ts_ms"),
+          unix_millis(col("r.p_ts")).as("p_ts_ms"))
+    }
   }
 
   /** LEFT OUTER stream-stream join — the attribution variant that also
@@ -850,9 +863,9 @@ object Streams {
     * silently drops every click that never converted. Outer emission is
     * watermark-gated by contract — a null row may only appear once no
     * future purchase could still match, i.e. when the GLOBAL watermark
-    * (the min across both sources) passes click_ts + window + lateness.
+    * (the min across both sides) passes click_ts + window + lateness.
     * The harness advances it with ONE far-future sentinel event on
-    * EACH stream: the watermark moves at that batch's END, and the
+    * EACH side: the watermark moves at that batch's END, and the
     * engine's no-data micro-batch (shouldRunAnotherBatch fires on any
     * watermark advance, and processAllAvailable waits for the cascade)
     * is the trigger in which the expired clicks emit — no second
@@ -862,40 +875,18 @@ object Streams {
     * capped feed.
     */
   def streamStreamLeftJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val (clicks, purchases) = clickPurchaseFeeds(spark, dir)
-    if (clicks.isEmpty)
+    val fed = clickPurchaseFeed(spark, dir)
+    if (!fed.exists(_._1 == "click"))
       return Seq.empty[(Long, Option[Long], Long, Long, Option[Long])]
         .toDF("click_id", "purchase_id", "user_id", "c_ts_ms", "p_ts_ms")
-    val inC = MemoryStream[KeyedTimedEvent](spark)
-    val inP = MemoryStream[KeyedTimedEvent](spark)
-    val joined = streamStreamJoin(
-      inC.toDF().select($"eventId".as("c_id"), $"userId", $"ts".as("c_ts")),
-      inP.toDF().select($"eventId".as("p_id"), $"userId", $"ts".as("p_ts")),
-      "userId", "c_ts", "p_ts", window = "30 minutes",
-      joinType = "left_outer")
-    val maxMs = (clicks ++ purchases).map(_.ts.getTime).max
-    def sentinel(id: Long, key: Long, plusDays: Long) =
-      KeyedTimedEvent(id, key,
-        new java.sql.Timestamp(maxMs + plusDays * 86400000L))
-    val name = runStreamToTable(spark, "ss_ljoin", Some(4)) { (n, ck) =>
-      joined
-        .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
-          col("l.userId").as("user_id"),
-          unix_millis(col("l.c_ts")).as("c_ts_ms"),
-          unix_millis(col("r.p_ts")).as("p_ts_ms"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      inC.addData(clicks.toIndexedSeq)
-      inP.addData(purchases.toIndexedSeq)
-      q.processAllAvailable()
-      inC.addData(sentinel(-1L, -1L, 100)); inP.addData(sentinel(-2L, -2L, 100))
-      q.processAllAvailable()
-    }
-    spark.table(name).filter($"click_id" >= 0)
+    val maxMs = fed.map(_._2.ts.getTime).max
+    def sentinel(kind: String, id: Long) = (kind,
+      KeyedTimedEvent(id, id, new java.sql.Timestamp(maxMs + 100 * 86400000L)))
+    clickPurchaseJoin(spark, "ss_ljoin",
+        Seq(fed, Seq(sentinel("click", -1L), sentinel("purchase", -2L))),
+        "left_outer")
+      .filter($"click_id" >= 0)
       .orderBy($"click_id", $"purchase_id")
   }
 
@@ -918,7 +909,6 @@ object Streams {
     * is merge_apply's own reconstruction SQL.
     */
   def mergeApplyStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     import graft.sources.Maintenance
     val v1 = graft.Tables.widened(spark,
@@ -950,23 +940,15 @@ object Streams {
         fed.collect { case (id, _) if id % 17 == 3 =>
           CdcOp(id, "", "delete") })
         .sortBy(_.doc_id)
-    val in = MemoryStream[CdcOp](spark)
-    runStreamToTable(spark, "cdc_merge", Some(4)) { (n, ck) =>
-      in.toDS().writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[CdcOp],
-            _: Long) =>
-          val b = batch.cache()
-          Maintenance.mergeApply(spark, StreamMergePath,
-            b.filter($"op" === "upsert").select($"doc_id", $"text"),
-            b.filter($"op" === "delete").select($"doc_id"))
-          b.unpersist(); ()
-        }
-        .queryName(n).start()
-    } { q =>
-      val (a, b) = feed.splitAt(feed.length / 2)
-      in.addData(a.toIndexedSeq); q.processAllAvailable()
-      in.addData(b.toIndexedSeq); q.processAllAvailable()
+    val (a, b) = feed.splitAt(feed.length / 2)
+    feedStream(spark, "cdc_merge", Seq(a.toSeq, b.toSeq)) {
+      _.writeStream.foreachBatch { (batch: Dataset[CdcOp], _: Long) =>
+        val b = batch.cache()
+        Maintenance.mergeApply(spark, StreamMergePath,
+          b.filter($"op" === "upsert").select($"doc_id", $"text"),
+          b.filter($"op" === "delete").select($"doc_id"))
+        b.unpersist(); ()
+      }
     }
     spark.read.parquet(StreamMergePath)
       .select($"doc_id", $"part", $"text")
@@ -1005,14 +987,10 @@ object Streams {
       .parquet(landing)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"cents").as("sum_cents"))
-    val name = runStreamToTable(spark, "file_source", Some(4)) { (n, ck) =>
-      stream.writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    } { q => q.awaitTermination() }
-    spark.table(name).orderBy($"event_type")
+    spark.table(runStreamToTable(spark, "file_source", HarnessConfs)(
+      memorySink(stream, OutputMode.Complete).trigger(Trigger.AvailableNow()))(
+      _.awaitTermination()))
+      .orderBy($"event_type")
   }
 
   /** Complete-output-mode global top-k — the third output-mode member
@@ -1028,7 +1006,6 @@ object Streams {
     */
   def topkCompleteQuery(spark: SparkSession, dir: String, k: Int = 10,
       docCap: Long = 200L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val docs = graft.Tables.documents(spark, dir)
       .filter($"doc_id" < docCap).select($"doc_id", $"text")
@@ -1036,20 +1013,12 @@ object Streams {
       .map(r => DocEvent(r.getLong(0), r.getString(1)))
     if (docs.isEmpty)
       return Seq.empty[(String, Long)].toDF("word", "cnt")
-    val in = MemoryStream[DocEvent](spark)
-    val counts = in.toDF()
-      .select(explode(split($"text", " ")).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("cnt"))
-    val name = runStreamToTable(spark, "topk_complete", Some(4)) { (n, ck) =>
-      counts.writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete).start()
-    } { q =>
-      val (a, b) = docs.splitAt(docs.length / 2)
-      in.addData(a.toIndexedSeq); q.processAllAvailable()
-      in.addData(b.toIndexedSeq); q.processAllAvailable()
-    }
-    spark.table(name).orderBy($"cnt".desc, $"word").limit(k)
+    val (a, b) = docs.splitAt(docs.length / 2)
+    streamTable(spark, "topk_complete", Seq(a.toSeq, b.toSeq),
+        OutputMode.Complete) {
+      _.select(explode(split($"text", " ")).as("word"))
+        .groupBy($"word").agg(count(lit(1)).as("cnt"))
+    }.orderBy($"cnt".desc, $"word").limit(k)
   }
 
   /** Driver-contract query with a FULL DuckDB oracle: the day-2 dedup
@@ -1077,7 +1046,6 @@ object Streams {
     */
   def incrementalMinhashQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val docs = graft.Tables.widened(spark, graft.Tables.documents(spark, dir))
       .select($"doc_id", $"text")
@@ -1090,21 +1058,14 @@ object Streams {
     val empty = Seq.empty[(Long, Long, Double)]
       .toDF("doc_a", "doc_b", "jaccard")
     if (streamed.isEmpty) return empty
-    val slices = {
-      val per = math.max(1, math.ceil(streamed.length.toDouble / numBatches).toInt)
-      streamed.grouped(per).toSeq
-    }
-    val in = MemoryStream[DocEvent](spark)
     // driver-side accumulation of per-batch PAIR LISTS (candidate-
     // bounded and tiny), not documents — the corpus itself stays
     // distributed throughout
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var idx = graft.operators.Dedup.buildIndex(standing)
-    runStreamToTable(spark, "inc_minhash", Some(4)) { (n, ck) =>
-      in.toDF().writeStream
+    feedStream(spark, "inc_minhash", sliced(streamed.toSeq, numBatches)) {
+      _.toDF().writeStream
         .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) { // ST4 empty-batch skip
             // the batch is read exactly once (by the shingle pass that
@@ -1115,9 +1076,7 @@ object Streams {
             idx = next
             ()
           }
-        }.start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
+        }
     }
     out.foldLeft(empty)(_ unionByName _).orderBy($"doc_a", $"doc_b")
   }
@@ -1135,7 +1094,6 @@ object Streams {
     */
   def incrementalIvfQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val nNew = 8
     val emb = graft.Tables.embeddings(spark, dir)
@@ -1148,17 +1106,10 @@ object Streams {
       .buildIvfIndex(emb.filter($"vec_id" >= nNew))
     if (built.cents.isEmpty) return empty
     val idx = built.copy(assigned = built.assigned.materialized)
-    val slices = {
-      val per = math.max(1, math.ceil(streamed.length.toDouble / numBatches).toInt)
-      streamed.grouped(per).toSeq
-    }
-    val in = MemoryStream[VecEvent](spark)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    runStreamToTable(spark, "inc_ivf", Some(4)) { (n, ck) =>
-      in.toDF().writeStream
+    feedStream(spark, "inc_ivf", sliced(streamed.toSeq, numBatches)) {
+      _.toDF().writeStream
         .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) { // ST4 empty-batch skip
             out += graft.operators.Similarity
@@ -1166,9 +1117,7 @@ object Streams {
               .materialized
             ()
           }
-        }.start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
+        }
     }
     out.foldLeft(empty)(_ unionByName _).orderBy($"query_id", $"rank")
   }
@@ -1196,7 +1145,6 @@ object Streams {
     */
   def hllStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
@@ -1205,17 +1153,12 @@ object Streams {
       .select($"event_id", $"event_type", $"user_id")
       .orderBy($"event_id").collect()
       .map(r => KeyedId(r.getString(1), r.getLong(2)))
-    val emptyOut = Seq.empty[(String, Long, Double)]
-      .toDF("key", "n_exact", "hll_estimate")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[KeyedId](spark)
-    val name = runStreamToTable(spark, "hll_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.k)
+    if (evs.isEmpty)
+      return Seq.empty[(String, Long, Double)]
+        .toDF("key", "n_exact", "hll_estimate")
+    val progress = streamTable(spark, "hll_stream",
+        sliced(evs.toSeq, numBatches), OutputMode.Update) {
+      _.groupByKey(_.k)
         .mapGroupsWithState[(Vector[Int], Long), HllProgress](
           GroupStateTimeout.NoTimeout) {
           (key: String, it: Iterator[KeyedId],
@@ -1232,15 +1175,9 @@ object Streams {
             gs.update((st, seq0 + n))
             HllProgress(key, seq0 + n, st)
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
     // final state per key -> (k, reg, r) relation -> shared finisher
-    val finalRegs = spark.table(name)
+    val finalRegs = progress
       .groupBy($"k").agg(max_by($"regs", $"seq").as("regs"))
       .select($"k", posexplode($"regs"))
       .select($"k", $"pos".cast("long").as("reg"), $"col".as("r"))
@@ -1274,7 +1211,6 @@ object Streams {
     */
   def cmsStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
@@ -1283,18 +1219,13 @@ object Streams {
       .select($"event_id", $"song_id".cast("long").as("v"))
       .orderBy($"event_id")
       .select($"v").as[Long].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long)]
-      .toDF("item", "n_exact", "n_cms")
-    if (vals.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(vals.length.toDouble / numBatches).toInt)
-      vals.grouped(per).toSeq
-    }
+    if (vals.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("item", "n_exact", "n_cms")
     // every value feeds every row j: key the stream records by row
-    val in = MemoryStream[(Int, Long)](spark)
-    val name = runStreamToTable(spark, "cms_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_._1)
+    val slices = sliced(vals.toSeq, numBatches).map(_.flatMap(v =>
+      Sketches.CmsParams.indices.map(j => (j, v))))
+    val progress = streamTable(spark, "cms_stream", slices, OutputMode.Update) {
+      _.groupByKey(_._1)
         .mapGroupsWithState[(Vector[Long], Long), CmsProgress](
           GroupStateTimeout.NoTimeout) {
           (j: Int, it: Iterator[(Int, Long)],
@@ -1312,18 +1243,8 @@ object Streams {
             gs.update((st, seq0 + n))
             CmsProgress(j, seq0 + n, st)
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s =>
-        in.addData(s.toIndexedSeq.flatMap(v =>
-          Sketches.CmsParams.indices.map(j => (j, v))))
-        q.processAllAvailable()
-      }
     }
-    val counters = spark.table(name)
+    val counters = progress
       .groupBy($"j").agg(max_by($"counters", $"seq").as("counters"))
       .select($"j", posexplode($"counters"))
       .select($"j", $"pos".cast("long").as("bucket"), $"col".as("c"))
@@ -1349,7 +1270,6 @@ object Streams {
     */
   def histStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
@@ -1358,17 +1278,12 @@ object Streams {
       .select($"event_id", $"event_type", $"value")
       .orderBy($"event_id")
       .select($"event_type", $"value").as[(String, Double)].collect()
-    val emptyOut = Seq.empty[(String, Long, Double, Double, Double)]
-      .toDF("key", "total", "p50", "p95", "p99")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[(String, Double)](spark)
-    val name = runStreamToTable(spark, "hist_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_._1)
+    if (evs.isEmpty)
+      return Seq.empty[(String, Long, Double, Double, Double)]
+        .toDF("key", "total", "p50", "p95", "p99")
+    val progress = streamTable(spark, "hist_stream",
+        sliced(evs.toSeq, numBatches), OutputMode.Update) {
+      _.groupByKey(_._1)
         .mapGroupsWithState[(Vector[Long], Long), HistProgress](
           GroupStateTimeout.NoTimeout) {
           (key: String, it: Iterator[(String, Double)],
@@ -1385,14 +1300,8 @@ object Streams {
             gs.update((st, seq0 + n))
             HistProgress(key, seq0 + n, st)
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    val counts = spark.table(name)
+    val counts = progress
       .groupBy($"k").agg(max_by($"bins", $"seq").as("bins"))
       .select($"k", posexplode($"bins"))
       .select($"k", $"pos".cast("long").as("bin"), $"col".as("n"))
@@ -1426,7 +1335,6 @@ object Streams {
     */
   def funnelStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.GroupState
     import spark.implicits._
     val stages = graft.operators.Relational.FunnelStages.toIndexedSeq
@@ -1439,17 +1347,10 @@ object Streams {
       .select($"user_id", expr("ts div 1000").as("tsu"), $"event_type")
       .orderBy($"tsu", $"user_id", $"event_type")
       .as[StampedType].collect()
-    val emptyOut = Seq.empty[FunnelProgress].toDS().toDF()
-      .drop("seq")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[StampedType](spark)
-    val name = runStreamToTable(spark, "funnel_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    if (evs.isEmpty) return Seq.empty[FunnelProgress].toDF().drop("seq")
+    val all = streamTable(spark, "funnel_stream",
+        sliced(evs.toSeq, numBatches), OutputMode.Update) {
+      _.groupByKey(_.user_id)
         .mapGroupsWithState[(Vector[Long], Long), FunnelProgress](
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[StampedType],
@@ -1464,14 +1365,7 @@ object Streams {
             FunnelProgress(uid, seq, st.length,
               st.lift(0), st.lift(1), st.lift(2), st.lift(3))
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    val all = spark.table(name)
     // monotone seq -> the max_by(seq) row is each user's final state
     all.groupBy($"user_id")
       .agg(max_by(struct($"n_stages", $"t_signup", $"t_view", $"t_click",
@@ -1530,58 +1424,34 @@ object Streams {
     */
   def twsRunningStatsQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long, Long, Long)]
-      .toDF("user_id", "n_events", "cents_sum", "min_cents", "max_cents")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    // transformWithState requires the RocksDB provider; scope the
-    // override to this query and restore the session default after
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val name = runStreamToTable(spark, "tws_stats", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningStatsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            implicitly[org.apache.spark.sql.Encoder[TwsStats]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s =>
-          in.addData(s.toIndexedSeq); q.processAllAvailable()
-        }
-      }
-      spark.table(name)
-        .groupBy($"user_id")
-        .agg(max_by(struct($"n_events", $"cents_sum", $"min_cents",
-          $"max_cents"), $"seq").as("f"))
-        .select($"user_id", $"f.n_events", $"f.cents_sum",
-          $"f.min_cents", $"f.max_cents")
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("user_id", "n_events", "cents_sum", "min_cents", "max_cents")
+    twsUpdates(spark, "tws_stats", sliced(evs, numBatches))(
+        new RunningStatsProcessor)
+      .groupBy($"user_id")
+      .agg(max_by(struct($"n_events", $"cents_sum", $"min_cents",
+        $"max_cents"), $"seq").as("f"))
+      .select($"user_id", $"f.n_events", $"f.cents_sum",
+        $"f.min_cents", $"f.max_cents")
+      .orderBy($"user_id")
+  }
+
+  /** The per-user Update-mode emissions of a `transformWithState`
+    * processor (no timers, no TTL) over `slices` of the cents feed, on
+    * the RocksDB provider the API requires.
+    */
+  private def twsUpdates[O: Encoder](spark: SparkSession, prefix: String,
+      slices: Seq[Seq[CentEvent]])(
+      processor: org.apache.spark.sql.streaming.StatefulProcessor[
+        Long, CentEvent, O]): DataFrame = {
+    import spark.implicits._
+    streamTable(spark, prefix, slices, OutputMode.Update, TwsConfs)(
+      _.groupByKey(_.user_id)
+        .transformWithState(processor, TimeMode.None(), OutputMode.Update(),
+          implicitly[Encoder[O]]))
   }
 
   case class TwsTtlCount(user_id: Long, n: Long)
@@ -1642,25 +1512,11 @@ object Streams {
     */
   def twsTtlCountsQuery(spark: SparkSession, dir: String,
       ttlMs: Long = 200L, gapMs: Long = 600L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long)]
-      .toDF("user_id", "n_flushes", "n_events")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / 2).toInt)
-      evs.grouped(per).toSeq
-    }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("user_id", "n_flushes", "n_events")
+    val slices = sliced(evs, 2)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // volatile-free is fine: ArrayBuffer append happens on the stream
     // thread, reads poll length with sleeps; synchronize for safety
@@ -1674,51 +1530,39 @@ object Streams {
         Thread.sleep(50)
       }
     }
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      runStreamToTable(spark, "tws_ttl", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new TtlCountProcessor(ttlMs),
-            org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-            OutputMode.Update(),
-            implicitly[org.apache.spark.sql.Encoder[TwsTtlCount]])
-          .toDF()
-          .writeStream
-          .queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            if (!b.isEmpty) {
-              val cp = b.materialized
-              out.synchronized { out += cp }
-              ()
-            }
+    val in = MemoryStream[CentEvent](spark)
+    runStreamToTable(spark, "tws_ttl", TwsConfs)(
+      in.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new TtlCountProcessor(ttlMs),
+          TimeMode.ProcessingTime(), OutputMode.Update(),
+          implicitly[Encoder[TwsTtlCount]])
+        .toDF()
+        .writeStream
+        .outputMode(OutputMode.Update)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          if (!b.isEmpty) {
+            val cp = b.materialized
+            out.synchronized { out += cp }
+            ()
           }
-          .start()
-      } { _ =>
-        in.addData(slices.head.toIndexedSeq); waitFor(1)
-        if (slices.length > 1) {
-          // the sleep only needs to EXCEED the TTL (the TTL clock on
-          // every slice-1 key started at its state update, BEFORE
-          // waitFor(1) returned) — 3x margin; in ProcessingTime mode
-          // the stream runs ~300 ms no-data batches continuously, so
-          // every slept millisecond is paid in wall clock
-          Thread.sleep(gapMs)
-          in.addData(slices(1).toIndexedSeq); waitFor(2)
-        }
-      }
-      out.foldLeft(Seq.empty[(Long, Long)].toDF("user_id", "n"))(
-          _ unionByName _)
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n_flushes"), sum($"n").as("n_events"))
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
+        }) { _ =>
+      in.addData(slices.head); waitFor(1)
+      if (slices.length > 1) {
+        // the sleep only needs to EXCEED the TTL (the TTL clock on
+        // every slice-1 key started at its state update, BEFORE
+        // waitFor(1) returned) — 3x margin; in ProcessingTime mode
+        // the stream runs ~300 ms no-data batches continuously, so
+        // every slept millisecond is paid in wall clock
+        Thread.sleep(gapMs)
+        in.addData(slices(1)); waitFor(2)
       }
     }
+    out.foldLeft(Seq.empty[(Long, Long)].toDF("user_id", "n"))(
+        _ unionByName _)
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("n_flushes"), sum($"n").as("n_events"))
+      .orderBy($"user_id")
   }
 
   case class TwsSession(user_id: Long, session_id: Long, n_events: Long,
@@ -1806,56 +1650,25 @@ object Streams {
   def twsTimerSessionsQuery(spark: SparkSession, dir: String,
       gapUs: Long = 12L * 3600 * 1000000L,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long, Long, Long)]
-      .toDF("user_id", "session_id", "n_events", "t_start", "t_end")
-    if (evs.isEmpty) return emptyOut
+    val evs = stampedFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("user_id", "session_id", "n_events", "t_start", "t_end")
     val maxUs = evs.map(r => r.ts.getTime * 1000 + r.ts.getNanos / 1000 % 1000).max
     val sentinel = StampedRow(-1L, -1L,
       new java.sql.Timestamp((maxUs + TimerSentinelUs) / 1000), 0.0)
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
+    streamTable(spark, "tws_timer_sessions",
+        sliced(evs, numBatches) :+ Seq(sentinel), OutputMode.Append, TwsConfs) {
+      _.withWatermark("ts", "1 hour")
+        .groupByKey(_.user_id)
+        .transformWithState(new TimerSessionProcessor(gapUs),
+          TimeMode.EventTime(), OutputMode.Append(),
+          implicitly[Encoder[TwsSession]])
     }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[StampedRow](spark)
-      val name = runStreamToTable(spark, "tws_timer_sessions", Some(4)) { (n, ck) =>
-        in.toDS()
-          .withWatermark("ts", "1 hour")
-          .groupByKey(_.user_id)
-          .transformWithState(new TimerSessionProcessor(gapUs),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[TwsSession]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Append).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-        in.addData(sentinel); q.processAllAvailable()
-      }
-      spark.table(name)
-        .filter($"user_id" >= 0)
-        .select($"user_id", $"session_id", $"n_events", $"t_start", $"t_end")
-        .orderBy($"user_id", $"session_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+      .filter($"user_id" >= 0)
+      .select($"user_id", $"session_id", $"n_events", $"t_start", $"t_end")
+      .orderBy($"user_id", $"session_id")
   }
 
   case class RecentItems(user_id: Long, seq: Long, items: String)
@@ -1938,45 +1751,32 @@ object Streams {
     * the oracle.
     */
   def twsRecentItemsQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame =
-    twsDriver(spark, dir, numBatches, "tws_recent") { in =>
-      val sp = in.sparkSession
-      import sp.implicits._
-      in.groupByKey(_.user_id)
-        .transformWithState(new RecentItemsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          implicitly[org.apache.spark.sql.Encoder[RecentItems]])
-        .toDF()
-    } { (spark, table) =>
-      import spark.implicits._
-      spark.table(table)
-        .groupBy($"user_id")
-        .agg(max_by($"items", $"seq").as("items"))
-        .orderBy($"user_id")
-    }
+      numBatches: Int = 2): DataFrame = {
+    import spark.implicits._
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty) return Seq.empty[(Long, String)].toDF("user_id", "items")
+    twsUpdates(spark, "tws_recent", sliced(evs, numBatches))(
+        new RecentItemsProcessor)
+      .groupBy($"user_id")
+      .agg(max_by($"items", $"seq").as("items"))
+      .orderBy($"user_id")
+  }
 
   /** MapState counter query: final per-(user, kind) counts == batch
     * groupBy — the oracle.
     */
   def twsMapCountsQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame =
-    twsDriver(spark, dir, numBatches, "tws_map") { in =>
-      val sp = in.sparkSession
-      import sp.implicits._
-      in.groupByKey(_.user_id)
-        .transformWithState(new MapCountsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          implicitly[org.apache.spark.sql.Encoder[TypeCount]])
-        .toDF()
-    } { (spark, table) =>
-      import spark.implicits._
-      spark.table(table)
-        .groupBy($"user_id", $"kind")
-        .agg(max_by($"cnt", $"seq").as("cnt"))
-        .orderBy($"user_id", $"kind")
-    }
+      numBatches: Int = 2): DataFrame = {
+    import spark.implicits._
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("user_id", "kind", "cnt")
+    twsUpdates(spark, "tws_map", sliced(evs, numBatches))(
+        new MapCountsProcessor)
+      .groupBy($"user_id", $"kind")
+      .agg(max_by($"cnt", $"seq").as("cnt"))
+      .orderBy($"user_id", $"kind")
+  }
 
   case class WarmState(user_id: Long, n_events: Long, cents_sum: Long)
 
@@ -2032,7 +1832,6 @@ object Streams {
     */
   def twsInitialStateQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     // adaptive split: half the OBSERVED id range, so the stream half is
     // non-empty at every scale factor (a fixed cap/2 leaves the stream
@@ -2040,12 +1839,9 @@ object Streams {
     val half = graft.Tables.events(spark, dir)
       .filter($"event_id" < HarnessFeedCap)
       .agg(expr("(max(event_id) + 1) div 2")).head().getLong(0)
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" >= half && $"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
+    val evs = centFeed(spark, dir, from = half)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("user_id", "n_events", "cents_sum")
     val warm = graft.Tables.events(spark, dir)
       .filter($"event_id" < half)
       .select($"user_id",
@@ -2053,91 +1849,18 @@ object Streams {
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"cents").as("cents_sum"))
       .as[WarmState]
-    val emptyOut = Seq.empty[(Long, Long, Long)]
-      .toDF("user_id", "n_events", "cents_sum")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
+    streamTable(spark, "tws_warm", sliced(evs, numBatches),
+        OutputMode.Update, TwsConfs) {
+      _.groupByKey(_.user_id)
+        .transformWithState(new WarmStartProcessor,
+          TimeMode.None(), OutputMode.Update(),
+          warm.groupByKey(_.user_id),
+          implicitly[Encoder[TwsStats]], implicitly[Encoder[WarmState]])
     }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val name = runStreamToTable(spark, "tws_warm", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new WarmStartProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            warm.groupByKey(_.user_id),
-            implicitly[org.apache.spark.sql.Encoder[TwsStats]],
-            implicitly[org.apache.spark.sql.Encoder[WarmState]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-      }
-      spark.table(name)
-        .groupBy($"user_id")
-        .agg(max_by(struct($"n_events", $"cents_sum"), $"seq").as("f"))
-        .select($"user_id", $"f.n_events", $"f.cents_sum")
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-  }
-
-  /** Shared TWS harness: capped CentEvent feed in event_id order,
-    * RocksDB provider scoped to the query, slices fed through a
-    * MemoryStream, finisher reduces the Update-mode emissions.
-    */
-  private def twsDriver(spark: SparkSession, dir: String, numBatches: Int,
-      name: String)(
-      pipe: org.apache.spark.sql.Dataset[CentEvent] => DataFrame)(
-      finish: (SparkSession, String) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    if (evs.isEmpty)
-      return Seq.empty[(Long, String)].toDF("user_id", "items")
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val tbl = runStreamToTable(spark, name, Some(4)) { (n, ck) =>
-        pipe(in.toDS())
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-      }
-      finish(spark, tbl)
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+      .groupBy($"user_id")
+      .agg(max_by(struct($"n_events", $"cents_sum"), $"seq").as("f"))
+      .select($"user_id", $"f.n_events", $"f.cents_sum")
+      .orderBy($"user_id")
   }
 
   /** Streaming EWMA: the per-user exponential recency score
@@ -2151,26 +1874,14 @@ object Streams {
     */
   def ewmaStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long)]
-      .toDF("user_id", "n_events", "ewma_cents")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[CentEvent](spark)
-    val name = runStreamToTable(spark, "ewma_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("user_id", "n_events", "ewma_cents")
+    streamTable(spark, "ewma_stream", sliced(evs, numBatches),
+        OutputMode.Update) {
+      _.groupByKey(_.user_id)
         .mapGroupsWithState[(Long, Long), EwmaProgress](
           GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[CentEvent], gs: GroupState[(Long, Long)]) =>
@@ -2182,14 +1893,7 @@ object Streams {
             gs.update((ewma, cnt))
             EwmaProgress(uid, cnt, cnt, ewma)
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    spark.table(name)
       .groupBy($"user_id")
       .agg(max_by(struct($"n_events", $"ewma_cents"), $"seq").as("f"))
       .select($"user_id", $"f.n_events", $"f.ewma_cents")
@@ -2211,25 +1915,13 @@ object Streams {
     */
   def anomalyStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[AnomalyFlag].toDS().toDF()
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[CentEvent](spark)
-    val name = runStreamToTable(spark, "anomaly_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty) return Seq.empty[AnomalyFlag].toDF()
+    streamTable(spark, "anomaly_stream", sliced(evs, numBatches),
+        OutputMode.Append) {
+      _.groupByKey(_.user_id)
         .flatMapGroupsWithState[(Long, Long, Long), AnomalyFlag](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[CentEvent],
@@ -2246,14 +1938,7 @@ object Streams {
             gs.update((n, s, s2))
             out.iterator
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-    }
-    spark.table(name).orderBy($"event_id")
+    }.orderBy($"event_id")
   }
 
   /** Streaming exact dedup — `dropDuplicates` on the event key under a
@@ -2272,43 +1957,32 @@ object Streams {
     * batch-distinct equality, so no event-time query sits below it.
     */
   def dedupStreamQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      numBatches: Int = 2): DataFrame =
+    dedupReplayQuery(spark, dir, numBatches, "dedup_stream")(
+      _.dropDuplicates("event_id"))
+
+  /** The shared body of the stream dedup queries: the capped feed in
+    * `numBatches` slices, every slice after the first re-sending its
+    * predecessor — duplicates are guaranteed to arrive in a LATER
+    * trigger, exercising the cross-trigger key state, not just
+    * intra-batch distinct — through `dedup` under the 1-hour
+    * watermark. Dedup in Append emits first arrivals immediately;
+    * re-sent rows are suppressed by key state (or dropped as late once
+    * the watermark passes them — either way never emitted twice).
+    */
+  private def dedupReplayQuery(spark: SparkSession, dir: String,
+      numBatches: Int, prefix: String)(
+      dedup: Dataset[StampedRow] => Dataset[StampedRow]): DataFrame = {
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
-    val emptyOut = Seq.empty[(Long, Long, Double)]
-      .toDF("event_id", "user_id", "value")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    // every slice after the first re-sends its predecessor: duplicates
-    // are guaranteed to arrive in a LATER trigger, exercising the
-    // cross-trigger key state, not just intra-batch distinct
+    val evs = stampedFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Double)].toDF("event_id", "user_id", "value")
+    val slices = sliced(evs, numBatches)
     val feeds = slices.zipWithIndex.map { case (s, i) =>
       if (i == 0) s else slices(i - 1) ++ s
     }
-    val in = MemoryStream[StampedRow](spark)
-    val name = runStreamToTable(spark, "dedup_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .withWatermark("ts", "1 hour")
-        .dropDuplicates("event_id")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      // dedup in Append emits first arrivals immediately; re-sent rows
-      // are suppressed by key state (or dropped as late once the
-      // watermark passes them — either way never emitted twice)
-      feeds.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-    }
-    spark.table(name)
+    streamTable(spark, prefix, feeds, OutputMode.Append)(in =>
+      dedup(in.withWatermark("ts", "1 hour")))
       .select($"event_id", $"user_id", $"value")
       .orderBy($"event_id")
   }
@@ -2331,40 +2005,9 @@ object Streams {
     * different state contract.
     */
   def dedupWithinWatermarkQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
-    val emptyOut = Seq.empty[(Long, Long, Double)]
-      .toDF("event_id", "user_id", "value")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val feeds = slices.zipWithIndex.map { case (s, i) =>
-      if (i == 0) s else slices(i - 1) ++ s
-    }
-    val in = MemoryStream[StampedRow](spark)
-    val name = runStreamToTable(spark, "dedup_within_wm", Some(4)) { (n, ck) =>
-      in.toDS()
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      feeds.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-    }
-    spark.table(name)
-      .select($"event_id", $"user_id", $"value")
-      .orderBy($"event_id")
-  }
+      numBatches: Int = 2): DataFrame =
+    dedupReplayQuery(spark, dir, numBatches, "dedup_within_wm")(
+      _.dropDuplicatesWithinWatermark("event_id"))
 
   /** Streaming SCD2 maintenance — the CDC shape of
     * [[graft.operators.Relational.scd2Dimension]]: each user's OPEN
@@ -2381,7 +2024,6 @@ object Streams {
     */
   def scd2StreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     val evs = graft.Tables.events(spark, dir)
@@ -2390,16 +2032,10 @@ object Streams {
         $"event_type".as("attr"))
       .orderBy($"tsu", $"event_id")
       .as[AttrEvent].collect()
-    val emptyOut = Seq.empty[Scd2Closed].toDF()
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[AttrEvent](spark)
-    val name = runStreamToTable(spark, "scd2_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    if (evs.isEmpty) return Seq.empty[Scd2Closed].toDF()
+    streamTable(spark, "scd2_stream", sliced(evs.toSeq, numBatches),
+        OutputMode.Append) {
+      _.groupByKey(_.user_id)
         .flatMapGroupsWithState[Scd2Open, Scd2Closed](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[AttrEvent], gs: GroupState[Scd2Open]) =>
@@ -2417,14 +2053,7 @@ object Streams {
             st.foreach(gs.update)
             out.iterator
         }
-        .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    spark.table(name)
       .select($"user_id", $"attr", $"valid_from", $"valid_to", $"version")
       .orderBy($"user_id", $"version")
   }
@@ -2488,7 +2117,6 @@ object Streams {
     * history = odd — a set-based, scale-free split.
     */
   def streamingRecommendE2eQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val empty = Seq.empty[(Int, Int, Long, String)]
       .toDF("userid", "songid", "score_uppm", "payload")
@@ -2501,14 +2129,10 @@ object Streams {
       .filter($"event_id" < HarnessFeedCap && $"event_id" % 2 === 1)
       .selectExpr("userid AS userId", "songid AS songId",
         "CAST(rating AS FLOAT) AS rating")
-    val in = MemoryStream[String](spark)
-    in.addData(streamLines.toIndexedSeq)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    runStreamToTable(spark, "recommend_e2e", None) { (n, ck) =>
-      in.toDF().writeStream
+    feedStream(spark, "recommend_e2e", Seq(streamLines.toSeq), Map.empty) {
+      _.toDF().writeStream
         .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) { // ST4 empty-batch skip
             val fresh = decodeRateEvents(batch)
@@ -2540,8 +2164,8 @@ object Streams {
             all.unpersist()
             ()
           }
-        }.start()
-    } { q => q.processAllAvailable() }
+        }
+    }
     out.foldLeft(empty)(_ unionByName _).orderBy($"songid")
   }
 }

@@ -76,31 +76,19 @@ object TemporalState {
     * independent implementation of the semantics. The event_id cap
     * keeps the harness feed bounded and is mirrored in the oracle.
     */
-  def streamingAsofQuery(spark: SparkSession, dir: String,
-      cap: Long = 10000L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def streamingAsofQuery(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val ev = graft.Tables.events(spark, dir)
-      .filter(col("event_id") < cap)
+      .filter(col("event_id") < Streams.HarnessFeedCap)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"),
         expr("ts div 1000").as("tsu"), col("value"), col("event_type"))
-      .collect() // bounded: cap (HarnessFeedCap-style event_id predicate)
+      .collect() // bounded: HarnessFeedCap
       .map(r => AsofIn(r.getLong(1), r.getLong(2),
         if (r.getString(4) == "click") 0 else 1, r.getLong(0), r.getDouble(3)))
-    val in = MemoryStream[AsofIn](spark)
-    val name = Streams.runStreamToTable(spark, "asof_enrich", Some(4)) {
-      (n, ck) =>
-        asofEnrich(in.toDS())
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(ev.toIndexedSeq)
-      q.processAllAvailable()
-    }
-    spark.table(name)
+    Streams.streamTable(spark, "asof_enrich", Seq(ev.toSeq), OutputMode.Append)(
+        asofEnrich)
       .select(col("event_id"), col("user_id"), col("tsu"), col("value"),
         col("click_id"), col("click_tsu"))
       .orderBy(col("event_id"))

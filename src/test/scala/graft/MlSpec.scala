@@ -78,7 +78,7 @@ class MlSpec extends AnyFunSuite {
     import spark.implicits._
     // the actual MatrixFactorizationModel the reference ships
     // (music_lens_als/: metadata JSON + user/product factor parquet)
-    val f = Recommender.loadMllibFactors(spark, "/root/reference/music_lens_als")
+    val f = Recommender.loadMllibFactors(spark, MllibArtifact.path)
     assert(f.rank == 4)
     val uSample = f.userFactors.limit(1).collect()(0)
     assert(uSample.getSeq[Double](1).length == f.rank)
@@ -101,7 +101,7 @@ class MlSpec extends AnyFunSuite {
 
   test("factorsTopK: deterministic top-k per user from the saved artifact") {
     val rows = Recommender
-      .factorsTopK(spark, "/root/reference/music_lens_als", nUsers = 7, k = 3)
+      .factorsTopK(spark, MllibArtifact.path, nUsers = 7, k = 3)
       .collect()
     assert(rows.length == 7 * 3)
     val byUser = rows.groupBy(_.getInt(0))
@@ -113,7 +113,7 @@ class MlSpec extends AnyFunSuite {
     }
     // stable across invocations (pure function of the artifact)
     val again = Recommender
-      .factorsTopK(spark, "/root/reference/music_lens_als", nUsers = 7, k = 3)
+      .factorsTopK(spark, MllibArtifact.path, nUsers = 7, k = 3)
       .collect()
     assert(rows.map(_.toString).sameElements(again.map(_.toString)))
   }

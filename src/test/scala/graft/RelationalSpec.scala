@@ -25,6 +25,7 @@ class RelationalSpec extends AnyFunSuite {
 
   test("every declared query runs and every query has matching oracle keys") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    MllibArtifact.path // als_factors_topk reads the saved mllib model
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       assert(n >= 0, s"$name failed")

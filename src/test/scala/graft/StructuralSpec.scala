@@ -32,6 +32,7 @@ class StructuralSpec extends AnyFunSuite {
     }
 
   test("no DecimalType in any SparkEntry query's FINAL schema") {
+    MllibArtifact.path // als_factors_topk reads the saved mllib model
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val schema =
